@@ -49,9 +49,13 @@ def oracle_sql() -> dict[str, str]:
 def rows_only_verified_by() -> dict[str, str]:
     """rows-only query name -> the oracled twin (driver-green
     rows+schema+hash) that certifies it.  Scope differs by family:
-    the minhash/simhash rows differ from their twins ONLY in hash
-    family (xxhash64/siphash vs md5), so the twin certifies the full
-    pipeline; content_fingerprints' winnowing column is a numpy
+    minhash_lsh_pairs/simhash_pairs run the same operator
+    (minhash_dedup_pairs / simhash_dedup_pairs) as their twins, which
+    differ in exactly two things: the base hash (siphash vs md5, so
+    the SimHash fingerprint is 64 vs 60 bits) and the parameters
+    (shingle size, hash/band counts, threshold, hot-bucket cap), so the
+    twin certifies the pipeline's code, not these parameter values;
+    content_fingerprints' winnowing column is a numpy
     rolling-hash Arrow UDF whose algorithm the md5 twin proves in SQL
     and whose implementation is pinned bit-for-bit to a pure-Python
     reference in tests; the four similarity rows (cosine_topk_lsh/ivf,

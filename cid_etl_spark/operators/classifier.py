@@ -46,7 +46,8 @@ ALPHA = 4.0
 
 def _token_bucket(tok: Column) -> Column:
     """Feature hash bucket: 28-bit md5-prefix hash mod BUCKETS
-    (engine-replicable; same base hash as operators.dedup.md5_base_hash)."""
+    (engine-replicable; the md5 base hash the MinHash signer uses under
+    ``base_hash="md5"`` in operators.dedup)."""
     return F.conv(F.substring(F.md5(tok), 1, 7), 16, 10).cast("long") % BUCKETS
 
 

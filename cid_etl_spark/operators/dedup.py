@@ -7,23 +7,36 @@ SimHash, and n-gram Jaccard near-dup.  All are shuffle-conscious:
 - priority/exact dedup = ONE hash shuffle on the key + per-partition
   sort (window ``row_number``), never a global sort (SURVEY §2.4 A3).
 - MinHash/LSH banding turns the O(N²) all-pairs problem into a
-  shuffle on (band, bucket-signature) — only documents that collide in
+  shuffle on (band, band-values) — only documents that collide in
   some band are ever compared, which is what makes near-dup feasible
   on 100 TB.
-- All hashing is deterministic (``xxhash64``/``md5``-derived), so runs
-  are reproducible across clusters and match SQL oracles.
+- One implementation per algorithm: ONE tokenizer
+  (:func:`_gram_hashes_exploded`, which replicates :func:`shingles`),
+  one Arrow signer per sketch family (:func:`minhash_signatures`,
+  :func:`simhash_fingerprints`), one banding function
+  (:func:`lsh_candidate_pairs`) and one exact-Jaccard verify.
+- All hashing is deterministic.  The signers take one ``base_hash``
+  choice: ``"siphash"`` (vectorised, the production default) or
+  ``"md5"``, an md5 hex prefix DuckDB replays as ``('0x' ||
+  substr(md5(g), 1, k))::BIGINT`` — the oracle-checked rows run the
+  production pipeline with that hash, so their twins certify it.
 """
 
 from __future__ import annotations
 
+import hashlib
 import logging
+import re
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from cid_etl_spark.operators.aggregates import materialize_once
 
 _LOG = logging.getLogger(__name__)
 
@@ -78,16 +91,22 @@ def exact_dedup(
 
 
 # ---------------------------------------------------------------------------
-# Near-duplicate dedup: MinHash + LSH
+# Shingles and the one tokenizer
 # ---------------------------------------------------------------------------
 
 #: Mersenne prime 2^31-1: modulus for the universal-hash family used by
-#: the MinHash permutations.  31-bit so that ``a*h + b`` stays < 2^62
-#: and never overflows BIGINT arithmetic (Spark 4 runs ANSI mode —
-#: silent wraparound is an error, and we wouldn't want it anyway).
-#: Fixed a/b parameters derive from the seed so signatures are
-#: reproducible run-to-run and cluster-to-cluster.
+#: the MinHash permutations.  Base hashes are at most 31 bits so that
+#: ``a*h + b`` stays < 2^62 and never overflows BIGINT arithmetic
+#: (Spark 4 runs ANSI mode — silent wraparound is an error, and we
+#: wouldn't want it anyway).  Fixed a/b parameters derive from the seed
+#: so signatures are reproducible run-to-run and cluster-to-cluster.
 _MERSENNE_31 = (1 << 31) - 1
+
+#: md5 hex-prefix width per sketch family for ``base_hash="md5"``:
+#: 7 digits (28 bits) keep MinHash's ``a*h + b`` inside BIGINT; 15
+#: digits (60 bits) give SimHash 60 bit votes with ``1 << 59`` in range
+#: in every engine.
+_MD5_HEX_DIGITS = {"minhash": 7, "simhash": 15}
 
 
 def _hash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
@@ -126,197 +145,83 @@ def shingles(text: Column | str, n: int = 5, words: bool = True) -> Column:
     return F.array_distinct(grams)
 
 
-def md5_base_hash(s: Column) -> Column:
-    """28-bit shingle hash from an md5 prefix — slower than xxhash64
-    but reproducible in any engine with md5 (DuckDB oracle parity:
-    ``('0x' || substr(md5(g), 1, 7))::BIGINT``)."""
-    return F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long")
+def _md5_digits(base_hash: str, family: str) -> int | None:
+    """md5 hex-prefix width for *base_hash* (``None`` = siphash)."""
+    if base_hash == "siphash":
+        return None
+    if base_hash == "md5":
+        return _MD5_HEX_DIGITS[family]
+    raise ValueError(f"base_hash must be 'siphash' or 'md5', got {base_hash!r}")
 
 
-def minhash_signature(
-    shingle_arr: Column,
-    num_hashes: int = 64,
-    seed: int = 42,
-    base_hash=None,
-) -> Column:
-    """MinHash signature as an ``array<bigint>`` of length *num_hashes*.
-
-    Base shingle hash is ``xxhash64`` truncated to 31 bits (JVM-side,
-    deterministic) unless *base_hash* (Column→Column) overrides it —
-    pass :func:`md5_base_hash` when an external engine must replay the
-    signature bit-for-bit; each permutation is a universal hash
-    ``(a*h + b) mod 2^31-1`` evaluated with ``F.transform`` /
-    ``F.array_min`` — all codegen, no Python in the row path.
-    """
-    if base_hash is None:
-        base_hash = lambda s: F.xxhash64(s).bitwiseAND(  # noqa: E731
-            F.lit(_MERSENNE_31).cast("bigint")
-        )
-    base = F.transform(shingle_arr, base_hash)
-    mins = [
-        F.array_min(
-            F.transform(base, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE_31))
-        )
-        for a, b in _hash_params(num_hashes, seed)
-    ]
-    return F.array(*mins)
+#: Java regex ``\s`` (what :func:`shingles` splits on), not Python's
+#: unicode ``\s``.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
-def _drop_hot_buckets(
-    banded: DataFrame, max_bucket_size: int | None
-) -> DataFrame:
-    """Hot-bucket guard shared by the banded LSH self-joins: drop
-    ``(band, bucket)`` groups larger than *max_bucket_size* — NEVER
-    silently (counts logged at WARNING) — so one degenerate bucket
-    can't become a single quadratic straggler task.  The membership
-    table stays LAZY on purpose: banding is cheap map work over the
-    (usually cached) signature table, while materializing it would
-    round-trip the raw band-key strings through RDD serialization —
-    measured ~15% of the composed pipeline's wall at sf0.1.  The guard
-    costs one extra banding pass for the bucket-count check; the
-    anti-join is added only when a hot bucket actually exists.
-    ``None`` disables the guard (and its one eager count job).
-    """
-    if max_bucket_size is None:
-        return banded
-    hot = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_bucket_size)
-    )
-    stats = hot.agg(
-        F.count(F.lit(1)).alias("n_buckets"), F.sum("__n").alias("n_rows")
-    ).first()
-    if stats["n_buckets"]:
-        _LOG.warning(
-            "LSH hot-bucket guard: dropped %d bucket(s) totalling %d banded "
-            "rows (> max_bucket_size=%d); members still pair via their "
-            "other bands",
-            stats["n_buckets"],
-            stats["n_rows"],
-            max_bucket_size,
-        )
-        banded = banded.join(
-            hot.select("band", "bucket"), ["band", "bucket"], "left_anti"
-        )
-    return banded
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    signature_col: str,
-    num_bands: int = 16,
-    hash_buckets: bool = True,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Band the signatures and emit candidate duplicate pairs
-    ``(id_a, id_b)`` with ``id_a < id_b``.
-
-    Rows agreeing on ALL rows-per-band values within any band land in
-    the same bucket; the self-join shuffles on the (band, bucket-hash)
-    key only.  Output is distinct pairs — verify with
-    :func:`jaccard_similarity` downstream.  ``hash_buckets=False``
-    keeps the raw band-value string as the bucket key (byte-identical
-    across engines, for oracle replay) instead of xxhash64-ing it —
-    same candidate set modulo hash collisions, fatter shuffle key.
-
-    **Hot-bucket guard.**  The within-bucket self-join is quadratic in
-    bucket size, so ONE degenerate band bucket (boilerplate-heavy
-    corpus: thousands of docs agreeing on a band) turns into a single
-    straggler task emitting billions of pairs.  With *max_bucket_size*
-    set, buckets larger than the cap are DROPPED before the join, and
-    the drop is never silent: the banded membership table stays LAZY
-    (banding is cheap map work over the usually-cached signature
-    table; materializing it would round-trip raw band keys through RDD
-    serialization — ~15% of the composed pipeline's wall at sf0.1), so
-    the guard costs one extra banding pass for the bucket-count check
-    and the dropped bucket/row counts are logged at WARNING; the
-    anti-join is added only when a hot bucket actually exists.  Docs
-    in a dropped bucket still pair through their other
-    ``num_bands - 1`` bands, and a bucket that hot is a near-clone
-    family the EXACT dedup stage upstream already collapses.
-
-    The DEFAULT is ``None`` (no cap): oracle-checked callers get the
-    exact uncapped semantics their SQL twins model.  Scale-oriented
-    callers pass an explicit cap (2000 → ≤2M pairs per bucket bounds
-    the worst single task at 100 TB; far above anything a healthy
-    corpus produces at test SF, so fixtures never trip it and any
-    firing is attributable via the WARNING log).
-    """
-    sig = F.col(signature_col)
-    # bands as (band_index, hash of the band slice)
-    rows_per_band = F.floor(F.size(sig) / num_bands).cast("int")
-
-    def band_key(b):
-        key = F.concat_ws(
-            ",",
-            F.transform(
-                F.slice(sig, b * rows_per_band + 1, rows_per_band),
-                lambda v: v.cast("string"),
-            ),
-        )
-        return F.xxhash64(key) if hash_buckets else key
-
-    banded = df.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(
-            F.transform(F.sequence(F.lit(0), F.lit(num_bands - 1)), band_key)
-        ).alias("band", "bucket"),
-    )
-    banded = _drop_hot_buckets(banded, max_bucket_size)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
-        .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-        .distinct()
-    )
-
-
-def jaccard_similarity(a: Column, b: Column) -> Column:
-    """Exact Jaccard over two distinct-element arrays."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
-def _gram_hashes_exploded(texts, n: int) -> "tuple":
+def _gram_hashes_exploded(texts, n: int, md5_digits: int | None = None) -> tuple:
     """Distinct word-n-gram hashes per text, replicating EXACTLY the
     tokenization of :func:`shingles` (and therefore of the DuckDB
     oracles written against it): ``lower`` → trim *spaces only* →
     split on Java ``\\s+`` keeping empty edge tokens → n-gram join with
     ``' '`` → distinct.  The only difference is that each gram leaves
-    the batch as a 64-bit deterministic hash
-    (``pandas.util.hash_array`` siphash) instead of a string.
+    the batch as a 64-bit hash instead of a string: vectorised siphash
+    (``pandas.util.hash_array``) by default, or the first *md5_digits*
+    hex digits of the gram's UTF-8 md5.
+
+    Distinctness is taken on the hashes; a prefix collision between two
+    grams of one document can only shrink that document's count, which
+    the MinHash minima ignore and a 60-bit SimHash vote never sees in
+    practice.
 
     Returns ``(flat: uint64 ndarray, lens: int64 ndarray)``.
     """
-    import re
+    if md5_digits:
+        nbytes = (md5_digits + 1) // 2
+        shift = 8 * nbytes - 4 * md5_digits
 
-    import numpy as np
+        def hash_grams(grams):
+            return np.fromiter(
+                (
+                    int.from_bytes(hashlib.md5(g.encode()).digest()[:nbytes], "big")
+                    >> shift
+                    for g in grams
+                ),
+                dtype=np.uint64,
+                count=len(grams),
+            )
+    else:
 
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java regex \s, not Python unicode \s
+        def hash_grams(grams):
+            return pd.util.hash_array(np.asarray(grams, dtype=object))
+
     all_grams: list = []
     lens = np.zeros(len(texts), dtype=np.int64)
     for i, t in enumerate(texts):
         if not isinstance(t, str):
-            continue  # null text: shingles() yields null, explode drops it
-        toks = ws.split(t.lower().strip(" "))
+            # null text has NO grams — the DuckDB twins' empty gram
+            # list.  (shingles(NULL) is [''], the same as shingles(''),
+            # so this is the one input where the two differ.)
+            continue
+        toks = _JAVA_WS.split(t.lower().strip(" "))
         if len(toks) > n:
             grams = [" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
         else:
             grams = [" ".join(toks)]
-        h = np.unique(pd.util.hash_array(np.asarray(grams, dtype=object)))
+        h = np.unique(hash_grams(grams))
         all_grams.append(h)
         lens[i] = len(h)
     flat = np.concatenate(all_grams) if all_grams else np.empty(0, dtype=np.uint64)
     return flat, lens
+
+
+def _segment_offsets(lens: np.ndarray) -> np.ndarray:
+    """Start offset of each non-empty segment of the flat gram array
+    (the ``reduceat`` index for the texts with ``lens > 0``)."""
+    kept = lens[lens > 0]
+    offsets = np.zeros(len(kept), dtype=np.int64)
+    np.cumsum(kept[:-1], out=offsets[1:])
+    return offsets
 
 
 def shingle_index_arrow(
@@ -338,8 +243,6 @@ def shingle_index_arrow(
     20-30 byte gram string — roughly 3× less shuffle volume, and the
     join itself is a long-vs-long comparison.
     """
-    import numpy as np
-
     cols = [F.col(id_col).alias("__id")]
     if block_col:
         cols.append(F.col(block_col).alias("__blk"))
@@ -365,6 +268,40 @@ def shingle_index_arrow(
 
     return prepped.mapInPandas(
         expand, schema=f"__id {id_field}{blk_field}, __n bigint, __g bigint"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Exact n-gram set similarity
+# ---------------------------------------------------------------------------
+
+
+def jaccard_similarity(a: Column, b: Column) -> Column:
+    """Exact Jaccard over two distinct-element arrays."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(F.array_union(a, b))
+    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+
+
+def _verify_jaccard(pairs: DataFrame, grams: DataFrame, threshold: float) -> DataFrame:
+    """The exact-Jaccard verify: join candidate ``(id_a, id_b)`` pairs
+    to their distinct-shingle arrays ``(__id, __grams)`` and keep
+    ``(id_a, id_b, jaccard)`` with ``round(jaccard, 4) >= threshold`` —
+    the contract of :func:`ngram_jaccard_pairs_exact` and the DuckDB
+    twins.  Joins are left un-hinted: AQE broadcasts whichever side is
+    actually small at runtime (candidates in the common case; never a
+    blown broadcast when a pathological corpus yields huge candidate
+    sets)."""
+    ga = grams.select(F.col("__id").alias("id_a"), F.col("__grams").alias("__ga"))
+    gb = grams.select(F.col("__id").alias("id_b"), F.col("__grams").alias("__gb"))
+    return (
+        pairs.join(ga, "id_a")
+        .join(gb, "id_b")
+        .withColumn(
+            "jaccard", F.round(jaccard_similarity(F.col("__ga"), F.col("__gb")), 4)
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -560,47 +497,195 @@ def ngram_jaccard_pairs_prefix(
         .select("id_a", "id_b")
         .distinct()
     )
-    ga = sized.select(F.col("__id").alias("id_a"), F.col("__grams").alias("__ga"))
-    gb = sized.select(F.col("__id").alias("id_b"), F.col("__grams").alias("__gb"))
-    verified = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn(
-            "jaccard", F.round(jaccard_similarity(F.col("__ga"), F.col("__gb")), 4)
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified.select("id_a", "id_b", "jaccard")
+    return _verify_jaccard(cand, sized, threshold)
 
 
-def minhash_signature_table(
+# ---------------------------------------------------------------------------
+# Near-duplicate dedup: MinHash + LSH
+# ---------------------------------------------------------------------------
+
+
+def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
     shingle_n: int = 5,
     num_hashes: int = 64,
     seed: int = 42,
+    base_hash: str = "siphash",
 ) -> DataFrame:
-    """MinHash signatures as ``(id, mh_0..mh_{k-1})`` columns via
-    explode + hash aggregate — the scale path.
+    """MinHash signatures ``(__id, __sig array<bigint>)``: tokenize,
+    shingle, hash and take *num_hashes* universal-hash minima
+    ``min((a*h + b) mod 2^31-1)`` inside ONE vectorised ``mapInPandas``
+    pass over the raw text.
 
-    Array higher-order functions (transform/aggregate) are interpreted
-    per element outside whole-stage codegen; exploding the shingles
-    and taking ``k`` plain ``min()`` aggregates keeps everything in
-    codegen with map-side partial aggregation, so the shuffle carries
-    one row per document, not per shingle.  (~6× faster than the
-    HOF formulation at sf0.1.)
+    - **No shuffle**: each signature is computed where its document
+      lives.
+    - **No interpreted HOFs**: Spark's array lambdas evaluate per
+      element outside codegen (~0.4 ms/doc for shingling alone,
+      measured); numpy hashes one flat array per batch and takes
+      segment minima with ``np.minimum.reduceat``.
+    - **No codegen bomb**: ``k`` separate ``min()`` aggregates compile
+      a huge Janino function (~9 s cold at k=32, measured).
+
+    *base_hash* ``"siphash"`` truncates the 64-bit gram hash to 31
+    bits; ``"md5"`` takes a 28-bit md5 prefix that DuckDB replays.
+    Null text has no shingles and gets NO row, so it is never a
+    candidate.
     """
-    sh = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(shingles(text_col, shingle_n)).alias("__shingle"),
+    md5_digits = _md5_digits(base_hash, "minhash")
+    params = _hash_params(num_hashes, seed)
+    a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
+    b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
+    p = np.int64(_MERSENNE_31)
+    prepped = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
+    id_field = df.schema[id_col].dataType.simpleString()
+
+    def sign(batches):
+        for pdf in batches:
+            flat, lens = _gram_hashes_exploded(pdf["__t"].tolist(), shingle_n, md5_digits)
+            keep = lens > 0
+            if not keep.any():
+                continue
+            if md5_digits is None:
+                flat = flat & np.uint64(_MERSENNE_31)
+            perm = (a_vec * flat.astype(np.int64)[None, :] + b_vec) % p
+            sig = np.minimum.reduceat(perm, _segment_offsets(lens), axis=1).T
+            yield pd.DataFrame(
+                {"__id": pdf["__id"].to_numpy()[keep], "__sig": list(sig)}
+            )
+
+    return prepped.mapInPandas(sign, schema=f"__id {id_field}, __sig array<bigint>")
+
+
+def _drop_hot_buckets(
+    banded: DataFrame, max_bucket_size: int | None
+) -> DataFrame:
+    """Hot-bucket guard of :func:`lsh_candidate_pairs`: drop ``(band,
+    bucket)`` groups larger than *max_bucket_size* — NEVER silently
+    (counts logged at WARNING) — so one degenerate bucket can't become
+    a single quadratic straggler task.  The membership table stays LAZY
+    on purpose: banding is cheap map work over the (usually
+    checkpointed) signature table, so the guard costs one extra banding
+    pass for the bucket-count check; the anti-join is added only when a
+    hot bucket actually exists.  ``None`` disables the guard (and its
+    one eager count job).
+    """
+    if max_bucket_size is None:
+        return banded
+    hot = (
+        banded.groupBy("band", "bucket")
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > max_bucket_size)
     )
-    h = F.xxhash64("__shingle").bitwiseAND(F.lit(_MERSENNE_31).cast("bigint"))
-    aggs = [
-        F.min((F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE_31)).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(_hash_params(num_hashes, seed))
-    ]
-    return sh.groupBy("__id").agg(*aggs)
+    stats = hot.agg(
+        F.count(F.lit(1)).alias("n_buckets"), F.sum("__n").alias("n_rows")
+    ).first()
+    if stats["n_buckets"]:
+        _LOG.warning(
+            "LSH hot-bucket guard: dropped %d bucket(s) totalling %d banded "
+            "rows (> max_bucket_size=%d); members still pair via their "
+            "other bands",
+            stats["n_buckets"],
+            stats["n_rows"],
+            max_bucket_size,
+        )
+        banded = banded.join(
+            hot.select("band", "bucket"), ["band", "bucket"], "left_anti"
+        )
+    return banded
+
+
+def lsh_candidate_pairs(
+    df: DataFrame,
+    id_col: str,
+    signature_col: str,
+    num_bands: int = 16,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Band the signatures and emit candidate duplicate pairs
+    ``(id_a, id_b)`` with ``id_a < id_b``.
+
+    Band ``b`` is the slice of ``rows_per_band = size // num_bands``
+    signature values starting at ``b * rows_per_band``; rows agreeing
+    on ALL of them land in the same bucket.  The bucket key IS that
+    slice of values — exact in every engine (the DuckDB twins compare
+    the same values as a joined string), with no bucket-hash
+    collisions.  The self-join shuffles on (band, band values) only.
+    Output is distinct pairs — verify downstream.
+
+    **Hot-bucket guard.**  The within-bucket self-join is quadratic in
+    bucket size, so ONE degenerate band bucket (boilerplate-heavy
+    corpus: thousands of docs agreeing on a band) turns into a single
+    straggler task emitting billions of pairs.  With *max_bucket_size*
+    set, buckets larger than the cap are DROPPED before the join by
+    :func:`_drop_hot_buckets`, with the dropped bucket/row counts
+    logged at WARNING.  Docs in a dropped bucket still pair through
+    their other ``num_bands - 1`` bands, and a bucket that hot is a
+    near-clone family the EXACT dedup stage upstream already
+    collapses.
+
+    The DEFAULT is ``None`` (no cap): oracle-checked callers get the
+    exact uncapped semantics their SQL twins model.  Scale-oriented
+    callers pass an explicit cap (2000 → ≤2M pairs per bucket bounds
+    the worst single task at 100 TB; far above anything a healthy
+    corpus produces at test SF, so fixtures never trip it and any
+    firing is attributable via the WARNING log).
+    """
+    sig = F.col(signature_col)
+    rows_per_band = F.floor(F.size(sig) / num_bands).cast("int")
+    bands = F.array(
+        *[
+            F.slice(sig, F.lit(b) * rows_per_band + 1, rows_per_band)
+            for b in range(num_bands)
+        ]
+    )
+    banded = df.select(
+        F.col(id_col).alias("__id"), F.posexplode(bands).alias("band", "bucket")
+    )
+    banded = _drop_hot_buckets(banded, max_bucket_size)
+    left = banded.alias("l")
+    right = banded.alias("r")
+    return (
+        left.join(
+            right,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col("l.__id") < F.col("r.__id")),
+        )
+        .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
+        .distinct()
+    )
+
+
+def minhash_candidate_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int = 5,
+    num_hashes: int = 64,
+    num_bands: int = 16,
+    seed: int = 42,
+    base_hash: str = "siphash",
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """The candidate stage of :func:`minhash_dedup_pairs`: sign with
+    :func:`minhash_signatures`, band with :func:`lsh_candidate_pairs`,
+    and return the unverified ``(id_a, id_b)`` collisions.
+
+    The signature table is k×8 bytes per DOCUMENT (thousands of times
+    smaller than the corpus) but the banding consumes it up to three
+    times (the hot-bucket check and both self-join sides); without a
+    barrier each consumer re-reads and re-signs the corpus, so it is
+    materialized once (``materialize_once``: released on GC, never
+    pinned, and skipped when only the plan is wanted).
+    """
+    signed = materialize_once(
+        minhash_signatures(
+            df, id_col, text_col, shingle_n, num_hashes, seed, base_hash
+        )
+    )
+    return lsh_candidate_pairs(signed, "__id", "__sig", num_bands, max_bucket_size)
 
 
 def minhash_dedup_pairs(
@@ -612,62 +697,31 @@ def minhash_dedup_pairs(
     num_bands: int = 16,
     threshold: float = 0.8,
     seed: int = 42,
+    base_hash: str = "siphash",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """End-to-end MinHash near-dup: shingle → sign → band → candidate
-    pairs → exact-Jaccard verify ≥ *threshold*.
+    pairs → exact-Jaccard verify.
 
-    Returns ``(id_a, id_b, jaccard)``.  Signatures come from
-    :func:`minhash_signature_table` (codegen'd aggregate); banding
-    hashes ``rows_per_band`` signature columns directly with a
-    multi-arg ``xxhash64`` — no array materialization at all.  The
-    exact-verify join then moves shingle arrays for candidate rows
-    only — at 100 TB that's the difference between feasible and not.
-    With *max_bucket_size* set (scale-oriented callers pass 2000;
-    the default ``None`` keeps oracle-exact uncapped semantics) the
-    band self-join runs behind the :func:`_drop_hot_buckets` guard —
-    see :func:`lsh_candidate_pairs` for the rationale and why fixtures
-    never trip it.
+    Returns ``(id_a, id_b, jaccard)`` with ``round(jaccard, 4) >=
+    threshold``.  Candidates come from :func:`minhash_candidate_pairs`;
+    the verify join then builds :func:`shingles` arrays for candidate
+    rows only — at 100 TB that's the difference between feasible and
+    not.  With *max_bucket_size* set (scale-oriented callers pass
+    2000; the default ``None`` keeps oracle-exact uncapped semantics)
+    the band self-join runs behind the hot-bucket guard — see
+    :func:`lsh_candidate_pairs`.  ``base_hash="md5"`` is the
+    engine-replicable variant the DuckDB twins replay.
     """
-    signed = minhash_signature_table_arrow(
-        df, id_col, text_col, shingle_n, num_hashes, seed
-    )
-    # Materialize the signature table: it is k×8 bytes per DOCUMENT
-    # (thousands of times smaller than the corpus), while the plan
-    # below consumes it four times (both self-join sides + downstream).
-    # Without the barrier Spark recomputes the shingle+sign pipeline —
-    # i.e. re-reads the corpus — once per consumer.  localCheckpoint
-    # rather than persist: the result is consumed lazily by the caller,
-    # so a persist would pin executor storage for the session.
-    signed = signed.localCheckpoint(eager=True)
-    rows_per_band = max(num_hashes // num_bands, 1)
-    band_hashes = F.array(
-        *[
-            F.xxhash64(
-                *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-            for b in range(num_bands)
-        ]
-    )
-    banded = _drop_hot_buckets(
-        signed.select("__id", F.posexplode(band_hashes).alias("band", "bucket")),
-        max_bucket_size,
-    )
-    l, r = banded.alias("l"), banded.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.__id") < F.col("r.__id")),
+    # the candidate list is tiny (bucket collisions only) but consumed
+    # three times below — materialize it so each consumer doesn't
+    # replay the band self-join
+    pairs = materialize_once(
+        minhash_candidate_pairs(
+            df, id_col, text_col, shingle_n, num_hashes, num_bands, seed,
+            base_hash, max_bucket_size,
         )
-        .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-        .distinct()
     )
-    # candidate list is tiny (bucket collisions only) but consumed three
-    # times below — materialize it so each consumer doesn't replay the
-    # band self-join (localCheckpoint: released on GC, never pinned)
-    pairs = pairs.localCheckpoint(eager=True)
     # shingle ONLY candidate rows: semi-join the corpus against the
     # candidate ids first, so the (expensive) shingle arrays are built
     # for collision rows, never the whole corpus
@@ -676,23 +730,12 @@ def minhash_dedup_pairs(
         .union(pairs.select(F.col("id_b").alias("__id")))
         .distinct()
     )
-    sh = (
+    grams = (
         df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
         .join(cand_ids, "__id", "left_semi")
-        .select("__id", shingles("__text", shingle_n).alias("__sh"))
+        .select("__id", shingles("__text", shingle_n).alias("__grams"))
     )
-    # joins left un-hinted: AQE broadcasts whichever side is actually
-    # small at runtime (candidates in the common case; never a blown
-    # broadcast when a pathological corpus yields huge candidate sets)
-    a = sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a"))
-    b = sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b"))
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", jaccard_similarity(F.col("__sh_a"), F.col("__sh_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_jaccard(pairs, grams, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -700,76 +743,52 @@ def minhash_dedup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash(text: Column | str, n: int = 3, bits: int = 64) -> Column:
-    """64-bit SimHash over word n-gram features, as a BIGINT column.
-
-    Per bit: count features with that hash bit set; the fingerprint bit
-    is 1 iff more than half vote 1.  ONE ``aggregate`` pass over the
-    feature array with an array-of-counters accumulator (``bit_get``
-    extracts bits with a non-literal position); the final assembly is a
-    64-way unrolled OR of literal shifts — all codegen, no Python.
-    """
-    feats = shingles(text, n)
-    hashes = F.transform(feats, lambda s: F.xxhash64(s))
-    total = F.size(hashes)
-    positions = F.sequence(F.lit(0), F.lit(bits - 1))
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("bigint"), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(positions, lambda b: F.bit_get(h, b)),
-            lambda a, x: a + x,
-        ),
-    )
-    sig = F.lit(0).cast("bigint")
-    for i in range(bits):
-        bit = (
-            F.when(F.get(counts, i) * 2 > total, F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-        )
-        sig = sig.bitwiseOR(F.shiftleft(bit, i))
-    return sig
+def _simhash_bits(base_hash: str) -> int:
+    md5_digits = _md5_digits(base_hash, "simhash")
+    return 64 if md5_digits is None else 4 * md5_digits
 
 
-def simhash_table(
+def simhash_fingerprints(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
-    bits: int = 64,
-    base_hash=None,
+    base_hash: str = "siphash",
 ) -> DataFrame:
-    """SimHash fingerprints as ``(__id, __fp)`` via explode + codegen'd
-    aggregate — the scale path (same rationale as
-    :func:`minhash_signature_table`): per exploded feature row we take
-    64 plain conditional sums (literal shift positions), which
-    whole-stage-codegens and partially aggregates map-side; the
-    array-lambda formulation in :func:`simhash` is interpreted.
-    *base_hash* (Column→Column) overrides the xxhash64 feature hash —
-    pass an md5-prefix hash (with ``bits<=60``) when an external
-    engine must replay the fingerprint bit-for-bit."""
-    feats = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(shingles(text_col, n)).alias("__feat"),
-    )
-    h = base_hash(F.col("__feat")) if base_hash else F.xxhash64("__feat")
-    one = F.lit(1).cast("bigint")
-    aggs = [
-        F.sum(F.shiftrightunsigned(h, i).bitwiseAND(one)).alias(f"b{i}")
-        for i in range(bits)
-    ] + [F.count(F.lit(1)).alias("__n")]
-    counts = feats.groupBy("__id").agg(*aggs)
-    sig = F.lit(0).cast("bigint")
-    for i in range(bits):
-        bit = (
-            F.when(F.col(f"b{i}") * 2 > F.col("__n"), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-        )
-        sig = sig.bitwiseOR(F.shiftleft(bit, i))
-    return counts.select("__id", sig.alias("__fp"))
+    """SimHash fingerprints ``(__id, __fp bigint)``: tokenize, shingle,
+    hash and take per-bit strict-majority votes (bit ``i`` is 1 iff
+    more than half of the distinct shingles' hashes have it) inside ONE
+    vectorised ``mapInPandas`` pass, like :func:`minhash_signatures`.
+
+    The fingerprint width follows from *base_hash*: 64 bits of siphash,
+    or 60 bits of md5 prefix (``1 << 59`` stays in BIGINT in every
+    engine) for DuckDB replay.  Null text has no shingles, so every
+    vote is lost and its fingerprint is 0 — what the twin computes.
+    """
+    md5_digits = _md5_digits(base_hash, "simhash")
+    shifts = np.arange(_simhash_bits(base_hash), dtype=np.uint64)
+    prepped = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
+    id_field = df.schema[id_col].dataType.simpleString()
+
+    def sign(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            flat, lens = _gram_hashes_exploded(pdf["__t"].tolist(), n, md5_digits)
+            fps = np.zeros(len(pdf), dtype=np.uint64)
+            keep = lens > 0
+            if keep.any():
+                bitmat = ((flat[:, None] >> shifts[None, :]) & np.uint64(1)).astype(
+                    np.int64
+                )
+                counts = np.add.reduceat(bitmat, _segment_offsets(lens), axis=0)
+                maj = (counts * 2 > lens[keep][:, None]).astype(np.uint64)
+                fps[keep] = (maj << shifts[None, :]).sum(axis=1, dtype=np.uint64)
+            yield pd.DataFrame(
+                {"__id": pdf["__id"].to_numpy(), "__fp": fps.view(np.int64)}
+            )
+
+    return prepped.mapInPandas(sign, schema=f"__id {id_field}, __fp bigint")
 
 
 def hamming_distance64(a: Column, b: Column) -> Column:
@@ -783,25 +802,15 @@ def simhash_dedup_pairs(
     text_col: str,
     max_hamming: int = 3,
     n: int = 3,
-    bits: int = 64,
-    signer=None,
+    base_hash: str = "siphash",
 ) -> DataFrame:
-    """SimHash near-dup pairs with pigeonhole banding.
-
-    The *bits*-wide fingerprint is split into ``max_hamming + 1``
-    chunks: two fingerprints within the Hamming budget MUST agree on
-    at least one chunk, so the self-join shuffles on (chunk_index,
-    chunk_value) only — never all-pairs — with guaranteed recall.
-    Smaller budgets → wider chunks → fewer candidate collisions.
-    *signer* overrides the fingerprint stage (default: the Arrow
-    xxhash64 signer) — e.g. an md5-based :func:`simhash_table` for
-    engine-replicable fingerprints.
-    """
-    if signer is None:
-        signer = lambda d: simhash_table_arrow(d, id_col, text_col, n)  # noqa: E731
-    fp = signer(df).select(F.col("__id"), F.col("__fp"))
+    """SimHash near-dup pairs ``(id_a, id_b, hamming)``: fingerprints
+    from :func:`simhash_fingerprints`, pigeonhole-banded by
+    :func:`hamming_pairs_from_fingerprints` over the fingerprint width
+    *base_hash* implies (64 bits siphash, 60 bits md5)."""
+    fp = simhash_fingerprints(df, id_col, text_col, n, base_hash)
     return hamming_pairs_from_fingerprints(
-        fp, id_col="__id", fp_col="__fp", bits=bits, max_hamming=max_hamming
+        fp, bits=_simhash_bits(base_hash), max_hamming=max_hamming
     )
 
 
@@ -828,9 +837,8 @@ def hamming_pairs_from_fingerprints(
     fp = fp.select(F.col(id_col).alias("__id"), F.col(fp_col).alias("__fp"))
     # 16 bytes per document — materialize so the chunk self-join's two
     # sides and the Hamming verify all reuse it instead of re-scanning
-    # the corpus (same rationale as minhash_dedup_pairs; localCheckpoint
-    # so the blocks release on GC instead of pinning session storage).
-    fp = fp.localCheckpoint(eager=True)
+    # the corpus (same rationale as minhash_candidate_pairs)
+    fp = materialize_once(fp)
     chunk_exprs = [
         F.shiftrightunsigned(F.col("__fp"), lo).bitwiseAND(
             F.lit((1 << (hi - lo)) - 1).cast("bigint")
@@ -863,151 +871,3 @@ def hamming_pairs_from_fingerprints(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-def _shingle_hashes_py(texts, n: int) -> "tuple":
-    """Vectorized Python-side word-shingle hashing for the Arrow
-    signers: per text, DISTINCT word n-gram hashes (64-bit, via
-    ``pandas.util.hash_array`` — deterministic siphash, identical on
-    every executor and run).
-
-    Rationale: Spark's array higher-order functions (transform /
-    concat_ws-over-slice / array_distinct) evaluate INTERPRETED per
-    element — measured ~0.4 ms/doc just to build shingle arrays, which
-    dominated minhash/simhash wall time.  Tokenizing and joining in
-    Python then hashing one flat numpy array is ~10× cheaper and keeps
-    the whole feature pipeline inside the same Arrow batch.
-
-    Returns ``(flat_hashes: uint64 ndarray, lens: int64 ndarray)`` —
-    the concatenated per-text distinct hashes and each text's count.
-    """
-    import numpy as np
-
-    all_grams: list[np.ndarray] = []
-    lens = np.zeros(len(texts), dtype=np.int64)
-    for i, t in enumerate(texts):
-        toks = t.split() if isinstance(t, str) else []
-        if len(toks) >= n:
-            grams = [" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
-        elif toks:
-            grams = [" ".join(toks)]
-        else:
-            lens[i] = 0
-            continue
-        h = np.unique(pd.util.hash_array(np.asarray(grams, dtype=object)))
-        all_grams.append(h)
-        lens[i] = len(h)
-    flat = (
-        np.concatenate(all_grams) if all_grams else np.empty(0, dtype=np.uint64)
-    )
-    return flat, lens
-
-
-def minhash_signature_table_arrow(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 5,
-    num_hashes: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signatures, Arrow path: the whole feature pipeline —
-    tokenize, shingle, hash, k permutation-mins — runs vectorized
-    inside ONE ``mapInPandas`` pass; the Spark plan is a trivial
-    ``lower(trim(text))`` projection.
-
-    Structural wins over the explode+groupBy formulation
-    (:func:`minhash_signature_table`):
-
-    - **No shuffle at all**: each document's signature is computed
-      where the document lives — signing is fully map-side.
-    - **No codegen bomb**: ``k`` separate ``min()`` aggregates compile
-      a huge Janino function (~9 s cold at k=32 — measured).
-    - **No interpreted HOFs**: Spark's array lambdas evaluate per
-      element outside codegen (~0.4 ms/doc for shingling alone —
-      measured); the numpy path hashes one flat array per batch and
-      takes segment minima with ``np.minimum.reduceat``.
-
-    Signature values differ from :func:`minhash_signature_table` (a
-    different 64-bit base hash), but MinHash guarantees hold for any
-    uniform hash; downstream Jaccard verification is exact either way.
-    """
-    import numpy as np
-
-    params = _hash_params(num_hashes, seed)
-    a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
-    p = np.int64(_MERSENNE_31)
-
-    prepped = df.select(
-        F.col(id_col).alias("__id"), F.lower(F.trim(F.col(text_col))).alias("__t")
-    )
-    out_fields = ", ".join(f"mh_{i} bigint" for i in range(num_hashes))
-    id_field = df.schema[id_col].dataType.simpleString()
-
-    def sign(batches):
-        for pdf in batches:
-            n_rows = len(pdf)
-            if n_rows == 0:
-                continue
-            flat, lens = _shingle_hashes_py(pdf["__t"].tolist(), shingle_n)
-            # 31-bit base hash keeps a*h in int64 range
-            flat = (flat & np.uint64(_MERSENNE_31)).astype(np.int64)
-            keep = lens > 0
-            out = np.full((n_rows, len(a_vec)), p, dtype=np.int64)
-            if keep.any():
-                perm = (a_vec * flat[None, :] + b_vec) % p
-                offsets = np.zeros(int(keep.sum()), dtype=np.int64)
-                np.cumsum(lens[keep][:-1], out=offsets[1:])
-                out[keep] = np.minimum.reduceat(perm, offsets, axis=1).T
-            cols = {"__id": pdf["__id"].to_numpy()}
-            cols.update({f"mh_{i}": out[:, i] for i in range(len(a_vec))})
-            yield pd.DataFrame(cols)
-
-    return prepped.mapInPandas(sign, schema=f"__id {id_field}, {out_fields}")
-
-
-def simhash_table_arrow(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, bits: int = 64
-) -> DataFrame:
-    """SimHash fingerprints, Arrow path (same design as
-    :func:`minhash_signature_table_arrow`): tokenize + shingle + hash +
-    64 per-bit majority votes all inside one vectorized ``mapInPandas``
-    pass over ``lower(trim(text))``.  Fully map-side, no shuffle, no
-    interpreted array lambdas, no 64-aggregate codegen unit."""
-    import numpy as np
-
-    prepped = df.select(
-        F.col(id_col).alias("__id"), F.lower(F.trim(F.col(text_col))).alias("__t")
-    )
-    id_field = df.schema[id_col].dataType.simpleString()
-    shifts = np.arange(bits, dtype=np.uint64)
-
-    def sign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            flat, lens = _shingle_hashes_py(pdf["__t"].tolist(), n)
-            fps = np.zeros(len(pdf), dtype=np.uint64)
-            keep = lens > 0
-            if keep.any():
-                bitmat = (
-                    (flat[:, None] >> shifts[None, :]) & np.uint64(1)
-                ).astype(np.int64)
-                offsets = np.zeros(int(keep.sum()), dtype=np.int64)
-                np.cumsum(lens[keep][:-1], out=offsets[1:])
-                counts = np.add.reduceat(bitmat, offsets, axis=0)
-                maj = (counts * 2 > lens[keep][:, None]).astype(np.uint64)
-                fps[keep] = (maj << shifts[None, :]).sum(axis=1, dtype=np.uint64)
-            yield pd.DataFrame(
-                {"__id": pdf["__id"].to_numpy(), "__fp": fps.view(np.int64)}
-            )
-
-    return prepped.mapInPandas(sign, schema=f"__id {id_field}, __fp bigint")
-
-
-def md5_base_hash_60(s):
-    """60-bit feature hash from an md5 prefix (SimHash variant of
-    :func:`md5_base_hash`): wide enough for bit votes, narrow enough
-    that ``1 << 59`` stays in BIGINT in every engine."""
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")

@@ -40,11 +40,7 @@ from cid_etl_spark.functions.text import (
 from cid_etl_spark.functions.text import LANG_MARKERS
 from cid_etl_spark.functions.vectors import cosine_similarity
 from cid_etl_spark.operators.aggregates import count_if, decimal_sum, money
-from cid_etl_spark.operators.dedup import (
-    minhash_dedup_pairs,
-    priority_dedup,
-    simhash_dedup_pairs,
-)
+from cid_etl_spark.operators.dedup import priority_dedup
 from cid_etl_spark.operators.similarity import embedding_neardup_pairs
 from cid_etl_spark.sources.parquet import load_table
 
@@ -524,12 +520,15 @@ def _ordered_names() -> list[str]:
 #: rows-only check), each mapped to the driver-green row that certifies
 #: it, with the honest scope of that certification (ADVICE r4 #1):
 #:
-#: - ``minhash_lsh_pairs`` / ``simhash_pairs`` differ from their twins
-#:   ONLY in hash family (xxhash64/siphash production hashes vs md5,
-#:   which DuckDB can replay) — the twin certifies the full
-#:   shingle/band/verify pipeline end-to-end, and the banding stage's
+#: - ``minhash_lsh_pairs`` / ``simhash_pairs`` run the same operator
+#:   (``minhash_dedup_pairs`` / ``simhash_dedup_pairs``) as their twins.
+#:   Exactly two things differ: the base hash (siphash in production,
+#:   md5 — which DuckDB can replay — in the twins; SimHash is 64 vs 60
+#:   bits wide as a result) and the parameters (shingle size, hash and
+#:   band counts, threshold, hot-bucket cap).  The twin certifies the
+#:   shingle/sign/band/verify code end-to-end; the banding stage's
 #:   recall/precision against exact ground truth is itself an
-#:   oracle-checked quantity since round 5 (``lsh_recall_report``).
+#:   oracle-checked quantity (``lsh_recall_report``).
 #: - ``content_fingerprints``'s winnowing column runs a numpy
 #:   rolling-hash Arrow UDF (round 5: the interpreted-lambda expression
 #:   took 68 s at sf0.1; the vectorized path takes <1 s).  The md5 twin

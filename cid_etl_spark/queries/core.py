@@ -709,8 +709,9 @@ def cosine_topk_bruteforce_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # I. Near-dup extensions without SQL oracles (driver: rows-only check).
-#    DuckDB lacks xxhash64, so signatures can't be replicated bit-for-bit;
-#    the algorithms are unit-tested in tests/test_dedup.py instead.
+#    DuckDB lacks the production siphash base hash, so signatures can't
+#    be replayed bit-for-bit; the md5 twins run the same operators
+#    (ROWS_ONLY_VERIFIED_BY) and tests/test_dedup.py covers the rest.
 # ---------------------------------------------------------------------------
 
 

@@ -2156,18 +2156,17 @@ def lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     test-pinned', the LSH pruning loss itself is now a hash-verified
     quantity.  Ground truth is the UNBLOCKED exact Jaccard >= 0.2 pair
     set (inverted shingle index — work scales with shared shingles);
-    candidates are the md5-family banded pairs (16 hashes, 4 bands,
-    raw-string band keys — same construction the driver-green
-    minhash_lsh_verified row certifies); recall = |cand AND truth| /
-    |truth|, precision likewise over candidates.  Both engines replay
-    shingling, permutation minima, banding, the candidate join, the
-    exact-truth join, and the division.  One-row report."""
+    candidates are the candidate stage of the production MinHash
+    pipeline (operators.dedup ``minhash_candidate_pairs``: 16 hashes,
+    4 bands keyed on their own values, md5 base hash — the pipeline
+    the oracled minhash_lsh_verified row certifies); recall =
+    |cand AND truth| / |truth|, precision likewise over candidates.
+    Both engines replay shingling, permutation minima, banding, the
+    candidate join, the exact-truth join, and the division.  One-row
+    report."""
     from cid_etl_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        md5_base_hash,
-        minhash_signature,
+        minhash_candidate_pairs,
         ngram_jaccard_pairs_exact,
-        shingles,
     )
 
     from cid_etl_spark.operators.aggregates import materialize_once
@@ -2176,24 +2175,16 @@ def lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize both pair sets once (r14, guide §5): each is consumed
     # TWICE — by its own count and by the true-positive join — and left
     # lazy each consumer re-ran the full derivation (the inverted-index
-    # self-join for truth; shingle → md5 MinHash → band self-join for
-    # cand, the most expensive interpreted chain in this query)
+    # self-join for truth; the band self-join for cand)
     truth = materialize_once(
         ngram_jaccard_pairs_exact(
             d, "doc_id", "text", n=3, threshold=0.2, block_col=None
         ).select("id_a", "id_b")
     )
-    sh = d.select(
-        "doc_id", shingles("text", n=3).alias("__grams")
-    ).withColumn(
-        "__sig",
-        minhash_signature(
-            "__grams", num_hashes=16, seed=42, base_hash=md5_base_hash
-        ),
-    )
     cand = materialize_once(
-        lsh_candidate_pairs(
-            sh, "doc_id", "__sig", num_bands=4, hash_buckets=False
+        minhash_candidate_pairs(
+            d, "doc_id", "text", shingle_n=3, num_hashes=16, num_bands=4,
+            base_hash="md5",
         )
     )
     tp = cand.join(truth, ["id_a", "id_b"])

@@ -24,11 +24,7 @@ from cid_etl_spark.functions.text import (
 from cid_etl_spark.functions.text import LANG_MARKERS
 from cid_etl_spark.functions.vectors import cosine_similarity
 from cid_etl_spark.operators.aggregates import count_if, decimal_sum, money
-from cid_etl_spark.operators.dedup import (
-    minhash_dedup_pairs,
-    priority_dedup,
-    simhash_dedup_pairs,
-)
+from cid_etl_spark.operators.dedup import priority_dedup
 from cid_etl_spark.operators.similarity import embedding_neardup_pairs
 from cid_etl_spark.sources.parquet import load_table
 

@@ -32,11 +32,7 @@ from cid_etl_spark.operators.aggregates import (
     materialize_once,
     money,
 )
-from cid_etl_spark.operators.dedup import (
-    minhash_dedup_pairs,
-    priority_dedup,
-    simhash_dedup_pairs,
-)
+from cid_etl_spark.operators.dedup import priority_dedup
 from cid_etl_spark.operators.similarity import embedding_neardup_pairs
 from cid_etl_spark.sources.parquet import load_table
 
@@ -1196,13 +1192,7 @@ def pretraining_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams once and probes a broadcast benchmark gram set map-side; the
     quota is a per-source window; packing reuses the language
     partitioning.  No stage funnels through the driver."""
-    from cid_etl_spark.operators.dedup import (
-        jaccard_similarity,
-        lsh_candidate_pairs,
-        md5_base_hash,
-        minhash_signature,
-        shingles,
-    )
+    from cid_etl_spark.operators.dedup import minhash_dedup_pairs, shingles
     from cid_etl_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1232,55 +1222,21 @@ def pretraining_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    # persist (lazy, columnar), NOT localCheckpoint: the shingle and
-    # signature ARRAY columns compress well in the in-memory columnar
-    # cache but cost ~1.7x wall when round-tripped through RDD row
-    # serialization (measured at sf0.1: 13.5s vs 7.9s steady-state for
-    # this query).  The cache is released deterministically below (the
-    # eager pair-list checkpoint is the last consumer), so residency is
-    # per-call even for callers that never clear caches.
-    sh = (
-        exact.select("doc_id", shingles(F.col("__t"), n=3).alias("__grams"))
-        .withColumn(
-            "__sig",
-            minhash_signature(
-                "__grams", num_hashes=16, seed=42, base_hash=md5_base_hash
-            ),
-        )
-        .persist()
+    # the production MinHash pipeline with the md5 base hash the twin
+    # replays; hot-bucket guard ON (explicit cap): this is the scale
+    # capstone; fixtures never trip 2000 and a firing is
+    # WARNING-logged, so the uncapped DuckDB twin stays attributably
+    # faithful.  Materialize the verified pairs before CC: the
+    # iterative rounds consume the pair list repeatedly, and without
+    # the barrier each round replays the band self-join + verify (the
+    # neardup_curation_pipeline round-2 bench regression was exactly
+    # this recompute)
+    pairs = materialize_once(
+        minhash_dedup_pairs(
+            exact, "doc_id", "__t", shingle_n=3, num_hashes=16, num_bands=4,
+            threshold=0.2, base_hash="md5", max_bucket_size=2000,
+        ).select("id_a", "id_b")
     )
-    # hot-bucket guard ON (explicit cap): this is the scale capstone;
-    # fixtures never trip 2000 and a firing is WARNING-logged, so the
-    # uncapped DuckDB twin stays attributably faithful
-    cands = lsh_candidate_pairs(
-        sh, "doc_id", "__sig", num_bands=4, hash_buckets=False,
-        max_bucket_size=2000,
-    )
-    g = sh.select("doc_id", "__grams")
-    pairs = (
-        cands.join(
-            g.select(F.col("doc_id").alias("id_a"), F.col("__grams").alias("__ga")),
-            "id_a",
-        )
-        .join(
-            g.select(F.col("doc_id").alias("id_b"), F.col("__grams").alias("__gb")),
-            "id_b",
-        )
-        .filter(
-            F.round(jaccard_similarity(F.col("__ga"), F.col("__gb")), 4) >= 0.2
-        )
-        .select("id_a", "id_b")
-        # materialize before CC: the iterative rounds consume the pair
-        # list repeatedly, and without the barrier each round replays
-        # the band self-join + verify (the neardup_curation_pipeline
-        # round-2 bench regression was exactly this recompute)
-        .localCheckpoint(eager=True)
-    )
-    # the eager checkpoint above was the last consumer of the signature
-    # cache — release it now so the returned (still lazy) plan pins no
-    # executor storage for callers that never clear caches (r3 driver
-    # bench regression)
-    sh.unpersist()
     cc = connected_components(pairs, "id_a", "id_b")
     dropped = cc.filter(F.col("node") != F.col("cluster_id")).select(
         F.col("node").alias("doc_id")

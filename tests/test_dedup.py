@@ -3,11 +3,15 @@ SURVEY §4.2.1) and the near-dup family on planted duplicates."""
 
 from __future__ import annotations
 
+import logging
+
+import pytest
 from pyspark.sql import functions as F
 
 from cid_etl_spark.operators.dedup import (
     exact_dedup,
     jaccard_similarity,
+    lsh_candidate_pairs,
     minhash_dedup_pairs,
     priority_dedup,
     shingles,
@@ -89,12 +93,11 @@ def test_simhash_finds_planted_near_dup(spark):
     assert (1, 3) not in found and (2, 3) not in found
 
 
-def test_lsh_hot_bucket_guard_drops_degenerate_bucket(spark):
-    """10k docs sharing band 0's bucket (a boilerplate family) must NOT
+def test_lsh_hot_bucket_guard_drops_degenerate_bucket(spark, caplog):
+    """10k docs sharing band 0's values (a boilerplate family) must NOT
     produce the ~50M quadratic pair explosion: the guard drops the hot
-    bucket, and the remaining (unique-per-doc) bands pair nothing."""
-    from cid_etl_spark.operators.dedup import lsh_candidate_pairs
-
+    bucket — with a WARNING, never silently — and the remaining
+    (unique-per-doc) bands pair nothing."""
     n = 10_000
     df = spark.range(n).select(
         F.col("id").alias("doc_id"),
@@ -106,15 +109,15 @@ def test_lsh_hot_bucket_guard_drops_degenerate_bucket(spark):
             F.col("id") * 3, -F.col("id") * 3,
         ).alias("sig"),
     )
-    pairs = lsh_candidate_pairs(
-        df, "doc_id", "sig", num_bands=4, max_bucket_size=100
-    )
+    with caplog.at_level(logging.WARNING, logger="cid_etl_spark.operators.dedup"):
+        pairs = lsh_candidate_pairs(
+            df, "doc_id", "sig", num_bands=4, max_bucket_size=100
+        )
     assert pairs.count() == 0
+    assert "dropped 1 bucket(s) totalling 10000" in caplog.text
 
 
 def test_lsh_guard_keeps_small_buckets_and_none_disables(spark):
-    from cid_etl_spark.operators.dedup import lsh_candidate_pairs
-
     # 30 docs all sharing every band: under the cap, all pairs emitted
     df = spark.range(30).select(
         F.col("id").alias("doc_id"),
@@ -126,3 +129,70 @@ def test_lsh_guard_keeps_small_buckets_and_none_disables(spark):
     # cap below the bucket size: everything dropped, loudly (log), not an error
     dropped = lsh_candidate_pairs(df, "doc_id", "sig", num_bands=2, max_bucket_size=10)
     assert dropped.count() == 0
+
+
+def test_lsh_bucket_is_the_band_values(spark):
+    """Buckets key on each band's own values: docs pair iff some band
+    slice is equal element for element."""
+    df = spark.createDataFrame(
+        [(1, [1, 2, 3, 4]), (2, [1, 2, 9, 9]), (3, [12, 3, 4, 0]), (4, [0, 0, 3, 4])],
+        "doc_id long, sig array<bigint>",
+    )
+    pairs = lsh_candidate_pairs(df, "doc_id", "sig", num_bands=2)
+    assert sorted(tuple(r) for r in pairs.collect()) == [(1, 2), (1, 4)]
+
+
+def test_base_hash_choices_are_checked(spark):
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="base_hash"):
+        minhash_dedup_pairs(df, "doc_id", "text", base_hash="xxhash64")
+
+
+def test_null_and_empty_text_match_the_twins(spark, tmp_path):
+    """NULL text has no shingles: the md5 MinHash row never makes it a
+    candidate and the md5 SimHash row gives it fingerprint 0, exactly as
+    their DuckDB twins do — while '' is one empty shingle, like the
+    twins' ``['']``.  Doc 5 is a planted near-dup of doc 4 and doc 7 a
+    case/whitespace variant of it."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cid_etl_spark.queries import oracle_queries, spark_queries
+
+    from .test_oracle_parity import _normalize, _values_equal
+
+    variant = "  " + BASE.upper().replace(" ", "\t")
+    texts = [None, None, "", BASE, NEAR, FAR, variant]
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(1, 8), pa.int64()),
+                "text": pa.array(texts, pa.string()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'documents.parquet'}')"
+    )
+    queries, oracles = spark_queries(), oracle_queries()
+    expected = {
+        "minhash_lsh_verified": {(4, 5), (4, 7), (5, 7)},
+        "simhash_pairs_verified": {(1, 2), (4, 7)},
+    }
+    try:
+        for name, pairs in expected.items():
+            s = _normalize(queries[name](spark, str(tmp_path)).toPandas())
+            d = _normalize(con.execute(oracles[name]).fetchdf())
+            assert set(zip(d["id_a"], d["id_b"])) == pairs, name  # non-vacuous
+            assert list(s.columns) == list(d.columns), name
+            assert len(s) == len(d), (name, s, d)
+            for col in s.columns:
+                assert all(
+                    _values_equal(x, y) for x, y in zip(s[col].tolist(), d[col].tolist())
+                ), (name, col, s, d)
+    finally:
+        con.close()

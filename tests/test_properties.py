@@ -196,3 +196,47 @@ def test_chunking_covers_every_token_exactly_once_at_stride_eq_size(spark, value
     }
     got = {r.doc_id: r.joined for r in rebuilt.collect()}
     assert got == expect
+
+
+# Whitespace-adversarial text: every Java ``\s`` character (tab, LF,
+# VT, FF, CR, space) plus NBSP, which Java's ``\s`` and Spark's
+# space-only ``trim`` both treat as a word character.
+_ws_text = st.text(
+    alphabet=st.sampled_from(list("abAZ \t\n\x0b\x0c\r\xa0")), max_size=24
+)
+_WS_EDGES = [
+    "", " ", "\t", "\n", "a", "a b", "  a  b  ", "\ta b\n", "a\t\tb\n\nc",
+    " \t ", "\n\nx", "x y z w v", "A  B\r\nC",
+]
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(_ws_text, min_size=1, max_size=25), st.integers(1, 4))
+def test_tokenizer_matches_shingles(spark, values, n):
+    """The one sketch tokenizer (``_gram_hashes_exploded``) must yield,
+    per text, exactly the hash set of the strings ``shingles()`` builds
+    in Spark — for both base hashes the signers use."""
+    import hashlib
+
+    import numpy as np
+    import pandas as pd
+
+    from cid_etl_spark.operators.dedup import _gram_hashes_exploded, shingles
+
+    texts = values + _WS_EDGES
+    rows = (
+        spark.createDataFrame(list(enumerate(texts)), "i long, s string")
+        .select("i", shingles("s", n).alias("g"))
+        .collect()
+    )
+    grams = [r["g"] for r in sorted(rows, key=lambda r: r["i"])]
+    hashers = {
+        None: lambda g: pd.util.hash_array(np.asarray(g, dtype=object)).tolist(),
+        7: lambda g: [int(hashlib.md5(x.encode()).hexdigest()[:7], 16) for x in g],
+        15: lambda g: [int(hashlib.md5(x.encode()).hexdigest()[:15], 16) for x in g],
+    }
+    for digits, hasher in hashers.items():
+        flat, lens = _gram_hashes_exploded(texts, n, digits)
+        got = np.split(flat, np.cumsum(lens)[:-1])
+        for t, g, h in zip(texts, grams, got):
+            assert set(h.tolist()) == set(hasher(g)), (repr(t), n, digits)
